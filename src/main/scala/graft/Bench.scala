@@ -147,8 +147,10 @@ object Bench {
     // the bounded tail window are the SLOWEST (most regression-relevant)
     // queries; plus one aggregate-stats line that always fits. Same
     // numbers as "queries" in the full line — reporting only, the timed
-    // region and the tail line are untouched.
-    val byTime = results.sortBy { case (_, v) => if (v < 0) Double.MaxValue else v }
+    // region and the tail line are untouched. Errored queries (-1) stay out
+    // of the chunks, where a per-query comparator would read -1 as a time:
+    // nerrors and BENCH.json's "errors" carry them.
+    val byTime = results.filter(_._2 >= 0).sortBy(_._2)
     val chunks = byTime.grouped(12).toSeq
     chunks.zipWithIndex.foreach { case (c, i) =>
       val body = c.map { case (k, v) => "\"" + k + "\":" + sec(v) }

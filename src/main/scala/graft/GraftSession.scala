@@ -68,6 +68,11 @@ object GraftSession {
       // the per-person Sort under every OSL window — off by default only
       // because the file-per-bucket check can slow planning on huge
       // multi-file buckets, a shape our commit protocol never produces.
+      // The claim holds only for an uncoalesced scan (one task per
+      // bucket): CoalesceCatalogBuckets packs a small snapshot's buckets
+      // into one task per core, and Spark then sorts each task instead;
+      // once the bytes or cores warrant a task per bucket, the claim
+      // returns.
       .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
       // zstd ~ 2x smaller files than snappy at comparable scan speed — at
       // 100 TB the scan is IO-bound, so storage compression is throughput.

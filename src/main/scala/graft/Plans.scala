@@ -365,9 +365,13 @@ object Plans {
     P("q_catalog_funnel",
       "round 16: the chain funnel over an INGESTED catalog table — the scan " +
         "says 'Bucketed: true' with a ManifestFileIndex location, and the whole " +
-        "person-window chain runs with ZERO Exchange hashpartitioning(id) and " +
-        "ZERO (id, stamp) Sort: the storage layout carries both (the reference's " +
-        "permanent insert-time partitioning, src/rpc_insert.cpp:154)"),
+        "person-window chain runs with ZERO Exchange hashpartitioning(id): the " +
+        "storage layout carries the partitioning (the reference's permanent " +
+        "insert-time partitioning, src/rpc_insert.cpp:154). The scan runs one " +
+        "task per core ('Coalesced to k' — CoalesceCatalogBuckets), so Spark " +
+        "sorts each task by (id, stamp); once the snapshot's bytes or the " +
+        "cluster's cores warrant one task per bucket the scan is not coalesced " +
+        "and claims the (id, stamp) order too — ZERO Sort"),
     P("q_catalog_customer",
       "round 16: single-person fetch from the ingested store — filter-only " +
         "plan, partition-pruned to the id's hash bucket (PartitionFilters on " +

@@ -373,9 +373,9 @@ object TierA {
             // batch only when no derived column reads another's name (an
             // accumulator increment that referenced a sibling `__acc_`
             // column must keep the sequential projection order)
+            val derivedNames = derived.map(_._1).toSet
             val independent = derived.forall { case (_, c) =>
-              val s = c.toString
-              !derived.exists { case (n2, _) => s.contains(n2) }
+              !readsAny(c, derivedNames)
             }
             val filtered = (if (derived.isEmpty) accBase
                             else if (independent) accBase.withColumns(derived.toMap)
@@ -4572,14 +4572,31 @@ object TierA {
         df.schema)
       .select(c).schema.head.dataType
 
+  /** True iff `c` reads any of `names`: walks the column's expression for
+    * attribute references, unresolved or resolved (a star reads every
+    * column). The one dependency test for batching derived columns into a
+    * single `withColumns` projection — [[ColBatch]] and the accumulator /
+    * write-rank batch both use it. */
+  private def readsAny(c: Column, names: scala.collection.Set[String]): Boolean = {
+    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRegex, UnresolvedStar}
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.classic.ColumnConversions.expression
+    names.nonEmpty && expression(c).exists {
+      case a: UnresolvedAttribute => a.nameParts.exists(names)
+      case a: AttributeReference => names(a.name)
+      case _: UnresolvedStar | _: UnresolvedRegex => true
+      case _ => false
+    }
+  }
+
   /** Batches consecutive "add a derived column" steps into single
     * [[org.apache.spark.sql.Dataset.withColumns]] projections. Every
     * Dataset operation runs the FULL analyzer eagerly (DeduplicateRelations
     * alone was ~half the chain family's 140-260 ms build phase, once per
     * withColumn — round-18 BuildProfile), so N independent ladder columns
     * should cost ONE pass, not N. Semantics are preserved exactly: a column
-    * whose expression references a still-pending name (detected on the
-    * unresolved attribute names) flushes the batch first, so each batch is
+    * whose expression references a still-pending name ([[readsAny]])
+    * flushes the batch first, so each batch is
     * internally dependency-free and `withColumns` order-independence holds;
     * re-adding a pending name flushes too (replacement must see the prior
     * projection). Reading [[df]] flushes. The analyzer extracts the batch's
@@ -4590,14 +4607,6 @@ object TierA {
     private var base = df0
     private val pending =
       scala.collection.mutable.LinkedHashMap.empty[String, Column]
-    // dependency test on the column's rendered expression: every attribute
-    // reference prints its name verbatim, so a substring probe can never
-    // MISS a pending-name reference — it can only flush spuriously on a
-    // name collision (harmless: a flush is always semantics-preserving)
-    private def refersToPending(c: Column): Boolean = {
-      val s = c.toString
-      pending.keysIterator.exists(s.contains)
-    }
     private def flush(): Unit =
       if (pending.nonEmpty) {
         base = base.withColumns(pending.toMap)
@@ -4606,7 +4615,7 @@ object TierA {
     /** Flushed + pending column names (the `df.columns.contains` analogue). */
     def columns: Set[String] = base.columns.toSet ++ pending.keySet
     def add(name: String, c: Column): Unit = {
-      if (pending.contains(name) || refersToPending(c)) flush()
+      if (pending.contains(name) || readsAny(c, pending.keySet)) flush()
       pending(name) = c
     }
     /** The materialized frame; flushes any pending batch first. */

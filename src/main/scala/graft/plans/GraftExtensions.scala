@@ -25,6 +25,8 @@ import graft.functions.DotProduct
   *     interpreted lambda closures per ELEMENT and blocks whole-stage
   *     codegen; the rule rewrites it to the primitive-loop expression, so
   *     the declarative form gets the fast path without anyone opting in.
+  *   - [[CoalesceCatalogBuckets]] after physical planning: the catalog's
+  *     bucketed scans run one task per core, not one per id-hash bucket.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -33,6 +35,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
       (children: Seq[Expression]) => DotProduct(children(0), children(1))))
     ext.injectOptimizerRule(_ => RewriteDotProduct)
+    ext.injectQueryPostPlannerStrategyRule(CoalesceCatalogBuckets(_))
   }
 }
 

@@ -33,20 +33,29 @@ import graft.TableCommit
   *     Spark's own `HashPartitioning.partitionIdExpression`) is embedded in
   *     the file NAME, which is how `FileSourceScanExec` maps files to
   *     output partitions;
-  *   - with one live file per bucket among the SELECTED partitions, the
-  *     scan also claims the (id, stamp) sort order, so
-  *     `Window.partitionBy(id).orderBy(stamp)` — every OSL compile — needs
-  *     NO exchange and NO sort. Undated tables always qualify (the insert
-  *     merge rewrites whole touched buckets as one file); dated tables
-  *     qualify whenever date pruning selects one date — otherwise Spark
-  *     itself drops the order claim (multi-file buckets) and plans keep
-  *     the exchange-free half. That asymmetry is the adjudicated trade of
-  *     the two layouts (Catalog.TableSettings.datePartition).
+  *   - the scan runs one task per core, not one per bucket: the
+  *     [[graft.plans.CoalesceCatalogBuckets]] rule coalesces the n buckets
+  *     into k tasks, the largest divisor of n within the split count
+  *     Spark would give the snapshot's bytes unbucketed. A snapshot whose
+  *     bytes (or cluster whose cores) warrant n tasks keeps k = n;
+  *   - the scan also claims the (id, stamp) sort order when it is NOT
+  *     coalesced (k = n) and holds one live file per bucket among the
+  *     SELECTED partitions, so `Window.partitionBy(id).orderBy(stamp)` —
+  *     every OSL compile — needs NO exchange and NO sort. Undated tables
+  *     always hold one file per bucket (the insert merge rewrites whole
+  *     touched buckets as one file); dated tables do whenever date pruning
+  *     selects one date. Otherwise — a coalesced task reads several sorted
+  *     files, or a bucket holds several dates — Spark drops the order
+  *     claim, sorts each task's rows, and plans keep the exchange-free
+  *     half. For dated tables that asymmetry is the adjudicated trade of
+  *     the two layouts (Catalog.TableSettings.datePartition); for small
+  *     snapshots the per-task sort costs less than the per-bucket tasks.
   *
-  * The claimed `HashPartitioning(id, n)` is truthful (same murmur3 hash at
-  * write time), so co-partitioned joins against genuinely shuffled frames
-  * stay correct — the reason the legacy xxhash64 layout cannot ride this
-  * path and falls back to the explicit-file-list read.
+  * The claimed `HashPartitioning(id, k)` is truthful (same murmur3 hash at
+  * write time, and `pmod(h, n) mod k = pmod(h, k)` for k dividing n), so
+  * co-partitioned joins against genuinely shuffled frames stay correct —
+  * the reason the legacy xxhash64 layout cannot ride this path and falls
+  * back to the explicit-file-list read.
   */
 object BucketedEvents {
 

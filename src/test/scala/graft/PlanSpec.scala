@@ -243,8 +243,6 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.functions.{count => fcount, lit => flit}
     val api = new Api(spark,
       java.nio.file.Files.createTempDirectory("graft_bkt").toString)
-    api.tableCreate(TableMeta("shop",
-      Seq(PropDef("value", "double")), TableSettings()))
     val now = 1704067200000L
     def ev(id: String, t: Long, e: String, v: Double) =
       s"""{"id":"$id","stamp":"${1704067200L + t}","event":"$e","value":$v}"""
@@ -253,8 +251,16 @@ class PlanSpec extends SparkSpec {
       ev(s"u$u", u * 10L + 1, "view", 2.0),
       ev(s"u$u", u * 10L + 2, "purchase", 30.0)))
     val batch2 = (0 until 8).map(u => ev(s"u$u", u * 10L + 3, "view", 4.0))
-    api.insert("shop", batch1, nowMs = now)
-    api.insert("shop", batch2, nowMs = now) // second gen: buckets re-merge
+    // "shop" keeps the 32-bucket default, which CoalesceCatalogBuckets
+    // sizes down to the local[2] session (2 tasks); "shop2" holds 2
+    // buckets, which the rule leaves uncoalesced — the regime in which the
+    // scan also claims the (id, stamp) order
+    for ((t, buckets) <- Seq("shop" -> 32, "shop2" -> 2)) {
+      api.tableCreate(TableMeta(t, Seq(PropDef("value", "double")),
+        TableSettings(storageBuckets = buckets)))
+      api.insert(t, batch1, nowMs = now)
+      api.insert(t, batch2, nowMs = now) // second gen: buckets re-merge
+    }
     val events = api.catalog.events("shop")
 
     // (a) groupBy(id) aggregates in place: zero Exchange anywhere
@@ -263,10 +269,10 @@ class PlanSpec extends SparkSpec {
     assert(!aggPlan.contains("Exchange"), s"person agg still shuffles:\n$aggPlan")
     assert(!aggPlan.contains("Sort"), aggPlan)
 
-    // (b) a Tier-A OSL chain funnel: the person window rides the bucket
-    // layout — no id exchange, no (id, stamp) sort; the only exchange left
-    // is the final tiny result-tree rollup
-    val chain = graft.osl.OslEngine.query(events,
+    // (b) a Tier-A OSL chain funnel over the uncoalesced table: the person
+    // window rides the bucket layout — no id exchange, no (id, stamp)
+    // sort; the only exchange left is the final tiny result-tree rollup
+    val chain = graft.osl.OslEngine.query(api.catalog.events("shop2"),
       """select
         |  count id as customers
         |  sum value as total_value
@@ -318,20 +324,11 @@ class PlanSpec extends SparkSpec {
       s"co-partitioned join dropped rows — the partitioning claim is false: $rows")
     // and the bucketed side itself contributed no shuffle: the SMJ's left
     // (agg-over-scan) subtree is exchange-free — the OTHER side conformed
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, ShuffleQueryStageExec}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
     val pl = joined.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.executedPlan
       case p => p
-    }
-    // AQE wraps materialized stages in leaf-like QueryStageExec nodes —
-    // descend through them explicitly
-    def findSmj(p: SparkPlan): Option[SortMergeJoinExec] = p match {
-      case j: SortMergeJoinExec => Some(j)
-      case q: QueryStageExec => findSmj(q.plan)
-      case other => other.children.iterator.flatMap(findSmj).nextOption()
     }
     val smj = findSmj(pl)
     assert(smj.isDefined, s"expected a sort-merge join:\n$pl")
@@ -344,15 +341,42 @@ class PlanSpec extends SparkSpec {
   }
 
   test("catalog-backed registry queries ride the bucketed store") {
-    // q_catalog_funnel: the person window needs NO id exchange and NO
+    // q_catalog_funnel reads the 32-bucket CatalogStore, which
+    // CoalesceCatalogBuckets sizes to the local[2] session: two tasks, the
+    // person window still exchange-free (HashPartitioning(id, 2) is
+    // truthful for 2 | 32) and still Tier A
+    val funnel = Queries.queries("q_catalog_funnel")(spark, dir)
+    val fp = funnel.queryExecution.executedPlan.toString
+    assert(!fp.contains("MapGroups"), s"catalog funnel fell back to Tier B:\n$fp")
+    assert(!fp.contains("Exchange hashpartitioning(id"),
+      s"catalog funnel still pays the person exchange:\n$fp")
+    val coalesced = scansOf(funnel.queryExecution.executedPlan)
+      .map(_.optionalNumCoalescedBuckets)
+    assert(coalesced.nonEmpty && coalesced.forall(_ == Some(2)),
+      s"expected the 32-bucket scan coalesced to 2 tasks, got $coalesced\n$fp")
+    // the same funnel over a 2-bucket twin of the store, which the rule
+    // leaves uncoalesced: the person window needs NO id exchange and NO
     // stamp sort — the storage layout carries both (round 16)
-    val p = plan("q_catalog_funnel")
+    val twinCat = new Catalog(spark,
+      java.nio.file.Files.createTempDirectory("graft_twin").toString)
+    twinCat.create(TableMeta("twin",
+      Seq(PropDef("value", "double"), PropDef("props", "text"),
+        PropDef("event_id", "int")),
+      TableSettings(idTextual = false, eventMax = 10000000, storageBuckets = 2)))
+    twinCat.insert("twin", Tables.events(spark, dir), nowMs = Queries.OslNow)
+    val twin = graft.osl.OslEngine.query(twinCat.events("twin"),
+        QueriesOsl.ChainFunnelScript, now = Queries.OslNow)
+      .select("depth", "g1", "g2", "customers", "n_rows", "total_value")
+    val p = twin.queryExecution.executedPlan.toString
     assert(!p.contains("MapGroups"), s"catalog funnel fell back to Tier B:\n$p")
     assert(!p.contains("Exchange hashpartitioning(id"),
       s"catalog funnel still pays the person exchange:\n$p")
     val stampSorts = p.linesIterator
       .filter(l => l.contains("Sort [") && l.contains("stamp"))
     assert(stampSorts.isEmpty, s"catalog funnel still sorts by stamp:\n$p")
+    // both bucket counts give the same tree
+    assert(twin.collect().map(_.toString).sorted.toSeq ==
+      funnel.collect().map(_.toString).sorted.toSeq)
     // q_catalog_customer: pruned to the id's hash bucket, filter-only plan
     val cp = plan("q_catalog_customer")
     assert(!cp.contains("Exchange") && !cp.contains("Sort ["), cp.take(3000))
@@ -375,15 +399,6 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("Exchange hashpartitioning(id"),
       s"dated store lost the bucket partitioning claim:\n$p")
     // the scan's selected file set is a strict subset of the live store
-    // (descend through AQE wrappers — collect() treats them as leaves)
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def scansOf(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => scansOf(a.executedPlan)
-      case q: QueryStageExec => scansOf(q.plan)
-      case s: FileSourceScanExec => Seq(s)
-      case other => other.children.flatMap(scansOf)
-    }
     val scans = scansOf(executed)
     assert(scans.nonEmpty, p.take(2000))
     val selected = scans.map(_.selectedPartitions.totalNumberOfFiles).sum
@@ -427,11 +442,13 @@ class PlanSpec extends SparkSpec {
     // order claim on UNFRAMED scans (multi-file buckets -> Spark re-sorts,
     // exchange-free), but a frame pruning to ONE date leaves one file per
     // selected bucket and Spark's own single-file check restores the claim.
+    // 2 buckets: a count CoalesceCatalogBuckets leaves uncoalesced on the
+    // local[2] session (a coalesced scan never claims the order)
     import org.apache.spark.sql.functions.{count => fcount, lit => flit}
     val api = new Api(spark,
       java.nio.file.Files.createTempDirectory("graft_dated").toString)
     api.tableCreate(TableMeta("shopd", Seq(PropDef("value", "double")),
-      TableSettings(datePartition = true, storageBuckets = 4)))
+      TableSettings(datePartition = true, storageBuckets = 2)))
     val day = 86400000L
     val d0 = 1704067200000L // 2024-01-01T00:00Z
     def ev(id: String, ms: Long, e: String, v: Double) =
@@ -478,14 +495,6 @@ class PlanSpec extends SparkSpec {
     // event history (the reference's attribute index,
     // src/oloop_property.cpp:34-307)
     val df = Queries.queries("q_propindex_counts")(spark, dir)
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def scansOf(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => scansOf(a.executedPlan)
-      case q: QueryStageExec => scansOf(q.plan)
-      case s: FileSourceScanExec => Seq(s)
-      case other => other.children.flatMap(scansOf)
-    }
     val scans = scansOf(df.queryExecution.executedPlan)
     assert(scans.nonEmpty)
     val files = scans.flatMap(_.relation.location.inputFiles)
