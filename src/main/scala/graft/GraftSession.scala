@@ -71,8 +71,8 @@ object GraftSession {
       // The claim holds only for an uncoalesced scan (one task per
       // bucket): CoalesceCatalogBuckets packs a small snapshot's buckets
       // into one task per core, and Spark then sorts each task instead;
-      // once the bytes or cores warrant a task per bucket, the claim
-      // returns.
+      // once a bucket's average bytes reach the file open cost, or the
+      // cores match the buckets, the claim returns.
       .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
       // zstd ~ 2x smaller files than snappy at comparable scan speed — at
       // 100 TB the scan is IO-bound, so storage compression is throughput.

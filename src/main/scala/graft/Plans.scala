@@ -369,8 +369,8 @@ object Plans {
         "storage layout carries the partitioning (the reference's permanent " +
         "insert-time partitioning, src/rpc_insert.cpp:154). The scan runs one " +
         "task per core ('Coalesced to k' — CoalesceCatalogBuckets), so Spark " +
-        "sorts each task by (id, stamp); once the snapshot's bytes or the " +
-        "cluster's cores warrant one task per bucket the scan is not coalesced " +
+        "sorts each task by (id, stamp); once a bucket's average bytes reach " +
+        "the file open cost, or the cluster has a core per bucket, the scan is not coalesced " +
         "and claims the (id, stamp) order too — ZERO Sort"),
     P("q_catalog_customer",
       "round 16: single-person fetch from the ingested store — filter-only " +

@@ -17,19 +17,27 @@ import graft.sources.ManifestFileIndex
   * `optionalNumCoalescedBuckets = k`, the largest divisor of the bucket
   * count n that is no greater than the task count Spark's own sizing
   * would give the snapshot's files unbucketed ([[splitCount]]). Small
-  * snapshots run one task per core; once the bytes warrant n tasks (or
-  * the cluster has n cores) k = n and the plan is left untouched.
+  * snapshots run one task per core; once the cluster has n cores, or a
+  * bucket's average bytes reach `filesOpenCostInBytes` (Spark's own price
+  * of opening a file, 4 MiB by default), k = n and the plan is left
+  * untouched ([[numTasks]]).
   *
   * The claimed `HashPartitioning(id, k)` stays truthful: bucket b is
   * `pmod(h, n)`, and for k dividing n, `pmod(h, n) mod k = pmod(h, k)` —
   * so person windows, `groupBy(id)` and co-partitioned joins stay
   * exchange-free. A coalesced scan gives up the (id, stamp) order claim
   * (a coalesced task reads several sorted files) and Spark sorts each
-  * partition instead; the size term keeps that sort to small snapshots.
+  * partition instead. The bytes guard keeps that sort to snapshots whose
+  * buckets cost less to read than to open, the regime where a task per
+  * bucket is mostly fixed overhead.
   *
   * k is sized on the WHOLE relation, not the pruned selection, so every
-  * scan of one snapshot (a self-join, the WAL-overlay union's two
-  * branches) claims the same partitioning and never gains a re-shuffle.
+  * scan of one snapshot claims the same partitioning: a self-join stays
+  * exchange-free, and the WAL-overlay union's two branches coalesce alike
+  * (the union's consumer re-shuffles it on id with or without the rule,
+  * because its merged branch is partitioned by a shuffle, not by buckets).
+  * A join against a scan of ANOTHER relation may adopt this scan's
+  * `HashPartitioning(id, k)` and shuffle the other side into k partitions.
   *
   * Injected as a post-planner-strategy rule: it runs on each (re)planned
   * physical plan under adaptive execution, before `EnsureRequirements`
@@ -47,14 +55,23 @@ case class CoalesceCatalogBuckets(spark: SparkSession) extends Rule[SparkPlan] {
       val minPartitionNum = conf.filesMinPartitionNum.getOrElse(
         conf.getConf(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM)
           .getOrElse(spark.sparkContext.defaultParallelism))
-      val k = CoalesceCatalogBuckets.numCoalesced(n,
-        CoalesceCatalogBuckets.splitCount(fileBytes, conf.filesOpenCostInBytes,
-          conf.filesMaxPartitionBytes, minPartitionNum))
+      val k = CoalesceCatalogBuckets.numTasks(n, fileBytes, conf.filesOpenCostInBytes,
+        conf.filesMaxPartitionBytes, minPartitionNum)
       if (k < n) s.copy(optionalNumCoalescedBuckets = Some(k)) else s
   }
 }
 
 object CoalesceCatalogBuckets {
+
+  /** The task count for a scan of `numBuckets` buckets over files of
+    * these sizes: n while a bucket's average bytes reach the open cost
+    * (each bucket is worth its own, sort-free task), otherwise the
+    * largest divisor of n within [[splitCount]]. */
+  def numTasks(numBuckets: Int, fileBytes: Seq[Long], openCost: Long,
+               maxPartitionBytes: Long, minPartitionNum: Int): Int =
+    if (fileBytes.sum / numBuckets >= openCost) numBuckets
+    else numCoalesced(numBuckets,
+      splitCount(fileBytes, openCost, maxPartitionBytes, minPartitionNum))
 
   /** The task count Spark's unbucketed file scan gives files of these
     * sizes: total bytes, each file charged the open cost, over the split

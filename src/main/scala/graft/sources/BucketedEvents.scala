@@ -36,8 +36,9 @@ import graft.TableCommit
   *   - the scan runs one task per core, not one per bucket: the
   *     [[graft.plans.CoalesceCatalogBuckets]] rule coalesces the n buckets
   *     into k tasks, the largest divisor of n within the split count
-  *     Spark would give the snapshot's bytes unbucketed. A snapshot whose
-  *     bytes (or cluster whose cores) warrant n tasks keeps k = n;
+  *     Spark would give the snapshot's bytes unbucketed. It coalesces only
+  *     while a bucket's average bytes are below `filesOpenCostInBytes`; a
+  *     bigger snapshot, or a cluster with n cores, keeps k = n;
   *   - the scan also claims the (id, stamp) sort order when it is NOT
   *     coalesced (k = n) and holds one live file per bucket among the
   *     SELECTED partitions, so `Window.partitionBy(id).orderBy(stamp)` —
@@ -48,8 +49,9 @@ import graft.TableCommit
   *     files, or a bucket holds several dates — Spark drops the order
   *     claim, sorts each task's rows, and plans keep the exchange-free
   *     half. For dated tables that asymmetry is the adjudicated trade of
-  *     the two layouts (Catalog.TableSettings.datePartition); for small
-  *     snapshots the per-task sort costs less than the per-bucket tasks.
+  *     the two layouts (Catalog.TableSettings.datePartition); a coalesced
+  *     snapshot trades the per-bucket tasks for a per-task sort of less
+  *     than n x `filesOpenCostInBytes` (128 MiB at the defaults) in all.
   *
   * The claimed `HashPartitioning(id, k)` is truthful (same murmur3 hash at
   * write time, and `pmod(h, n) mod k = pmod(h, k)` for k dividing n), so

@@ -3,7 +3,10 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.adaptive.ShuffleQueryStageExec
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Not}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.expressions.Window
@@ -23,8 +26,7 @@ class BucketCoalesceSpec extends SparkSpec {
   private val MaxPartition = 128 * MiB // spark.sql.files.maxPartitionBytes default
 
   private def sized(numBuckets: Int, fileBytes: Seq[Long], cores: Int): Int =
-    CoalesceCatalogBuckets.numCoalesced(numBuckets,
-      CoalesceCatalogBuckets.splitCount(fileBytes, OpenCost, MaxPartition, cores))
+    CoalesceCatalogBuckets.numTasks(numBuckets, fileBytes, OpenCost, MaxPartition, cores)
 
   test("sizing: one task per core for small snapshots, n once the bytes or cores warrant it") {
     // a tiny 32-bucket snapshot on 4 cores: one task per core
@@ -33,6 +35,16 @@ class BucketCoalesceSpec extends SparkSpec {
     assert(sized(32, Seq.fill(32)(100L << 10), cores = 32) == 32)
     // 100 TB in 32 buckets on 4 cores: the bytes warrant n tasks
     assert(sized(32, Seq.fill(32)((100L << 40) / 32), cores = 4) == 32)
+    // a mid-size 2 GiB snapshot on 4 cores: Spark's split count alone
+    // would give 16, but a 64 MiB bucket is worth its own sort-free task
+    assert(CoalesceCatalogBuckets.splitCount(Seq.fill(32)(64 * MiB), OpenCost,
+      MaxPartition, 4) == 17)
+    assert(sized(32, Seq.fill(32)(64 * MiB), cores = 4) == 32)
+    // the bytes guard is the bucket's AVERAGE against the open cost, over
+    // all its files (a dated bucket holds one file per date)
+    assert(sized(32, Seq.fill(32)(OpenCost - 1), cores = 4) == 4)
+    assert(sized(32, Seq.fill(32)(OpenCost), cores = 4) == 32)
+    assert(sized(32, Seq.fill(32 * 8)(OpenCost / 8), cores = 4) == 32)
     // k is the largest DIVISOR of n within the split count
     assert(CoalesceCatalogBuckets.numCoalesced(6, 4) == 3)
     assert(CoalesceCatalogBuckets.numCoalesced(7, 4) == 1)
@@ -118,22 +130,53 @@ class BucketCoalesceSpec extends SparkSpec {
     assert(collected(framed) == expected(rows.filter(r => r._2 >= D0 + Day && r._2 < D0 + 2 * Day)))
   }
 
-  test("read through a pending WAL overlay: exact rows over a coalesced base") {
-    val api = freshApi()
-    create(api, "wal", TableSettings(flushRows = 100000))
+  /** For each scan matching `p`, the number of exchanges hash-partitioned
+    * on `id` alone on its path up to the plan's root. */
+  private def idShufflesAbove(plan: SparkPlan, p: FileSourceScanExec => Boolean): Seq[Int] = {
+    def onId(e: ShuffleExchangeLike): Boolean = e.outputPartitioning match {
+      case HashPartitioning(Seq(a: Attribute), _) => a.name == "id"
+      case _ => false
+    }
+    def walk(n: SparkPlan, above: Int): Seq[Int] = n match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan, above)
+      case q: QueryStageExec => walk(q.plan, above)
+      case s: FileSourceScanExec => if (p(s)) Seq(above) else Nil
+      case e: ShuffleExchangeLike => walk(e.child, above + (if (onId(e)) 1 else 0))
+      case other => other.children.flatMap(walk(_, above))
+    }
+    walk(plan, 0)
+  }
+
+  test("read through a pending WAL overlay: exact rows, both branches coalesced alike") {
     // the last two days of five customers stay pending: their buckets
     // merge through the overlay, every other bucket reads as committed
     val (pending, base) =
       rows.partition(r => r._2 >= D0 + 3 * Day && r._1.drop(1).toInt < 5)
-    insert(api, "wal", base)
-    api.catalog.flush("wal", D0 + 30 * Day)
-    val gens = api.catalog.eventVersions("wal")
-    insert(api, "wal", pending)
-    assert(api.catalog.eventVersions("wal") == gens, "expected a pending WAL batch")
-    val df = ranked(api.catalog.events("wal"))
-    assert(scansOf(df.queryExecution.executedPlan).map(_.optionalNumCoalescedBuckets)
-      .contains(Some(2)))
-    assert(collected(df) == expected(rows))
+    // 32 buckets coalesce to the session's 2 cores; 2 buckets stay as they are
+    val untouchedShuffles = for ((buckets, k) <- Seq(32 -> Some(2), 2 -> None)) yield {
+      val api = freshApi()
+      create(api, "wal", TableSettings(storageBuckets = buckets, flushRows = 100000))
+      insert(api, "wal", base)
+      api.catalog.flush("wal", D0 + 30 * Day)
+      val gens = api.catalog.eventVersions("wal")
+      insert(api, "wal", pending)
+      assert(api.catalog.eventVersions("wal") == gens, "expected a pending WAL batch")
+      val df = ranked(api.catalog.events("wal"))
+      assert(collected(df) == expected(rows), s"$buckets buckets")
+      val plan = df.queryExecution.executedPlan
+      val ks = scansOf(plan).map(_.optionalNumCoalescedBuckets)
+      assert(ks.size == 2 && ks.forall(_ == k), s"expected $k on both branches, got $ks\n$plan")
+      // the untouched-bucket branch (the scan that prunes the touched
+      // buckets away): a single path to the root
+      val untouched = idShufflesAbove(plan,
+        _.partitionFilters.exists(_.isInstanceOf[Not]))
+      assert(untouched.size == 1, plan.toString)
+      untouched.head
+    }
+    // the union's merged branch is partitioned by the shuffle, not the
+    // buckets, so the person window re-shuffles the union on id with or
+    // without coalescing; coalescing adds no id exchange of its own
+    assert(untouchedShuffles == Seq(1, 1), s"id exchanges over the untouched scan: $untouchedShuffles")
   }
 
   test("pruned customer fetch over a coalesced scan: exactly that customer's rows") {
@@ -148,7 +191,7 @@ class BucketCoalesceSpec extends SparkSpec {
     assert(collected(df) == expected(rows.filter(_._1 == "u7")))
   }
 
-  test("a join against a genuinely shuffled side: exact rows, no exchange on the bucketed side") {
+  test("joins against a shuffled side and a self-join: exact rows, no exchange on the bucketed sides") {
     // 32 buckets coalesce to the session's 2 cores; 2 buckets stay as they
     // are. Either claim must be truthful: a false one silently drops rows
     val shuffled = (0 until 40).map(u => (s"u$u", u)).toDF("id", "tag")
@@ -171,6 +214,16 @@ class BucketCoalesceSpec extends SparkSpec {
         case q: ShuffleQueryStageExec => q
       }
       assert(leftShuffles.isEmpty, s"bucketed join side re-exchanged:\n${smj.get.left}")
+      // a self-join: both scans of one snapshot claim the same k, so
+      // neither side is re-exchanged
+      val perId = api.catalog.events("shop").groupBy("id").agg(count(lit(1)).as("n"))
+      val self = perId.hint("merge").join(perId.withColumnRenamed("n", "m"), Seq("id"))
+      val selfRows = self.collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+      assert(selfRows == (0 until 40).map(u => s"u$u" -> (5L, 5L)).toMap, s"$buckets buckets: $selfRows")
+      val selfPlan = self.queryExecution.executedPlan
+      assert(findSmj(selfPlan).isDefined, s"expected a sort-merge join:\n$selfPlan")
+      assert(scansOf(selfPlan).map(_.optionalNumCoalescedBuckets) == Seq(k, k), selfPlan.toString)
+      assert(!selfPlan.toString.contains("Exchange"), s"self-join re-exchanged:\n$selfPlan")
     }
   }
 }

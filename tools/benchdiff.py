@@ -1,8 +1,7 @@
 #!/usr/bin/env python3
 """Diff two graft.Bench records query by query (standard library only).
 
-    python3 tools/benchdiff.py PARENT_BENCH.json CHANGE_BENCH.json
-        [--match PREFIX] [--floor SEC] [--rel FRAC]
+    python3 tools/benchdiff.py PARENT_BENCH.json CHANGE_BENCH.json [--match PREFIX]
 
 Each input is the BENCH.json that `runMain graft.Bench` writes: per-query
 min-of-2 seconds under "queries", per-query {stages, jobs} of the measured
@@ -19,13 +18,13 @@ Every query present in both records gets one label:
   faster        same plan, and the change is faster by more than the band;
   within noise  same plan, and the difference is inside the band.
 
-The noise band of a query is max(floor * stages, rel * parent seconds).
+The noise band of a query is max(floor * stages, REL * parent seconds).
 Most of a small query's time is the per-stage scheduling floor, and that
 floor moves with host load, so the band grows with the stage count. The
-floor defaults to the lower quartile of seconds per stage over the parent's
-profiled queries (the queries that are nothing but stage overhead); --floor
-overrides it. --rel (default 0.10) covers the queries whose time is real
-work rather than stages.
+floor is fitted as the lower quartile of seconds per stage over the
+parent's profiled queries (the queries that are nothing but stage
+overhead). REL (10%) covers the queries whose time is real work rather
+than stages.
 
 Prints one row per query and a count per label. Exit code 0.
 """
@@ -35,6 +34,7 @@ import statistics
 import sys
 
 LABELS = ("plan changed", "slower", "faster", "within noise", "error", "no profile")
+REL = 0.10
 
 
 def load(path):
@@ -55,7 +55,7 @@ def fit_floor(rec):
     return statistics.quantiles(per_stage, n=4)[0]
 
 
-def classify(name, parent, change, floor, rel):
+def classify(name, parent, change, floor):
     """One row dict for a query present in both records."""
     pt, ct = parent["queries"][name], change["queries"][name]
     pp = parent.get("profile", {}).get(name)
@@ -68,20 +68,21 @@ def classify(name, parent, change, floor, rel):
     elif (pp["stages"], pp["jobs"]) != (cp["stages"], cp["jobs"]):
         row["label"] = "plan changed"
     else:
-        band = max(floor * pp["stages"], rel * pt)
+        band = max(floor * pp["stages"], REL * pt)
         delta = ct - pt
         row["label"] = ("slower" if delta > band else
                         "faster" if delta < -band else "within noise")
     return row
 
 
-def diff(parent, change, floor=None, rel=0.10, match=""):
-    """Returns (floor used, rows) for the queries both records share."""
+def diff(parent, change, floor=None, match=""):
+    """Returns (floor used, rows) for the queries both records share; the
+    floor is fitted on the parent unless given."""
     if floor is None:
         floor = fit_floor(parent)
     names = sorted(q for q in parent["queries"]
                    if q in change["queries"] and q.startswith(match))
-    return floor, [classify(q, parent, change, floor, rel) for q in names]
+    return floor, [classify(q, parent, change, floor) for q in names]
 
 
 def render(floor, rows):
@@ -107,12 +108,8 @@ def main(argv=None):
     ap.add_argument("parent")
     ap.add_argument("change")
     ap.add_argument("--match", default="", help="only queries with this name prefix")
-    ap.add_argument("--floor", type=float, default=None,
-                    help="per-stage noise floor in seconds (default: fitted)")
-    ap.add_argument("--rel", type=float, default=0.10,
-                    help="relative noise band for work-bound queries")
     a = ap.parse_args(argv)
-    floor, rows = diff(load(a.parent), load(a.change), a.floor, a.rel, a.match)
+    floor, rows = diff(load(a.parent), load(a.change), match=a.match)
     print(render(floor, rows))
     return 0
 

@@ -35,9 +35,9 @@ class BenchDiffTest(unittest.TestCase):
     def test_relative_band_for_work_bound_queries(self):
         prof = {"q": {"stages": 1, "jobs": 1}}
         p = record({"q": 20.0}, prof)
-        _, rows = benchdiff.diff(p, record({"q": 21.5}, prof), floor=0.05, rel=0.10)
+        _, rows = benchdiff.diff(p, record({"q": 21.5}, prof), floor=0.05)
         self.assertEqual(rows[0]["label"], "within noise")
-        _, rows = benchdiff.diff(p, record({"q": 22.5}, prof), floor=0.05, rel=0.10)
+        _, rows = benchdiff.diff(p, record({"q": 22.5}, prof), floor=0.05)
         self.assertEqual(rows[0]["label"], "slower")
 
     def test_errors_and_missing_profiles(self):
