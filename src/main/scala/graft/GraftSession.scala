@@ -40,21 +40,20 @@ object GraftSession {
       // shuffle is ~2 MiB. 64 KiB keeps tiny exchanges parallel up to
       // cluster width while changing NOTHING at scale (any real partition is
       // megabytes, so the total/parallelism term dominates the max() long
-      // before the floor matters). Overridable for odd deployments.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"))
+      // before the floor matters). SPARK_GRAFT_CONF overrides it.
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       // Tungsten page size: Spark derives it from heap/cores (~18 MiB in
       // the 16 GiB local[32] bench JVM, 64 MiB on a typical big-heap
       // executor) and every sort/agg/window TASK allocates and zeroes at
       // least one page — a 16-task ladder stage churned ~300 MB of pages
-      // for ~6k rows/task, and per-stage jvmGCTime (PlanProbe listener)
+      // for ~6k rows/task, and per-stage jvmGCTime (graft.Trace prints it)
       // showed 1-3 s of collector time per chain query. 2 MiB pages cut
       // that churn ~9x; large sorts just chain more pages (the page table
       // allows 8192 pages/consumer = 16 GiB per operator, far above any
       // sane per-task state). Interleaved A/B on a 10-query mixed subset:
-      // 9.4-10.0 s -> 7.6-8.5 s. Env-overridable for huge-memory executors.
-      .config("spark.buffer.pageSize",
-        sys.env.getOrElse("SPARK_GRAFT_PAGE_SIZE", "2m"))
+      // 9.4-10.0 s -> 7.6-8.5 s. Huge-memory executors override it through
+      // SPARK_GRAFT_CONF.
+      .config("spark.buffer.pageSize", "2m")
       // Let AQE re-plan the OUTPUT partitioning of cached plans too — off by
       // default, which pins every memoized index stage (memoStage /
       // localCheckpoint frames) at the static shuffle-partition count; small

@@ -287,7 +287,7 @@ object Queries {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     allRegistry.filter(_.verify).map(q => q.name -> q.fn).toMap
 
-  /** Every registry entry including bench-only rows — the bench/QBench
+  /** Every registry entry including bench-only rows — the Bench/Trace
     * lookup surface. */
   def allQueries: Map[String, (SparkSession, String) => DataFrame] =
     allRegistry.map(q => q.name -> q.fn).toMap
