@@ -358,7 +358,7 @@ final class Api(spark: SparkSession, val warehouse: String,
 
   /** `foreach=` histogram evaluation as ONE distributed plan: the distinct
     * value walk feeds [[graft.osl.OslEngine.histogramForeach]], which binds
-    * `each_value` per customer IN MEMORY inside a single groupByKey pass,
+    * `each_value` per customer IN MEMORY inside a single per-person pass,
     * and one grouped aggregation buckets every value's per-person returns
     * together. Replaces |values| sequential driver-looped Spark jobs with 2
     * jobs total regardless of value count. Returns (value → bucket rows) in

@@ -132,7 +132,10 @@ object Bench {
     //   1. persist the full payload to BENCH.json next to the repo root,
     //   2. print the per-query map on its own line (best-effort detail),
     //   3. print a LAST, tiny, self-checked total line the tail always holds.
-    val full = s"""{"metric":"total","value":${sec(total)},"unit":"sec","stat":"min-of-2","queries":$qs,"errors":$errJson,"profile":$profJson,"sf":"$sfDir"}"""
+    // the leg: core count and the JVM's max heap, so a diff of two records
+    // can tell whether they measured the same configuration
+    val heapMb = Runtime.getRuntime.maxMemory >> 20
+    val full = s"""{"metric":"total","value":${sec(total)},"unit":"sec","stat":"min-of-2","queries":$qs,"errors":$errJson,"profile":$profJson,"sf":"$sfDir","cpus":${cpus.toInt},"driver_heap_mb":$heapMb}"""
     if (only.isEmpty) try { // subset A/B runs must not clobber the real record
       java.nio.file.Files.write(
         java.nio.file.Paths.get("BENCH.json"),

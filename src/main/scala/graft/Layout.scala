@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   * `(|hash(id)| % 13337) % partitionCount`). The Spark-native equivalent is
   * a BUCKETED table: `bucketBy(id)` + `sortBy(id, stamp)` means
   *
-  *   - every per-person operation (`groupByKey(id)`, window over
+  *   - every per-person operation grouped on the `id` column itself
+  *     (`groupBy(id)`, the interpreter's sorted groups, window over
   *     `partitionBy(id)`, person-level joins) reads pre-clustered data with
   *     NO shuffle — at 100 TB the shuffle this avoids is the dominant cost
   *     of the whole engine;

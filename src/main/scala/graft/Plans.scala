@@ -42,8 +42,8 @@ object Plans {
         "partial distinct-doc) and a 20-row takeOrdered — no windows, no second shuffle of raw tokens"),
     P("q_histogram_foreach",
       "histogram foreach=prop: ONE grouped plan binds each_value per customer inside a single " +
-        "groupByKey pass — one shuffle + one bucket aggregation for ALL property values, " +
-        "replacing 256 sequential driver-looped queries"),
+        "per-person pass (sorted groups on id) — one shuffle + one bucket aggregation for ALL " +
+        "property values, replacing 256 sequential driver-looped queries"),
     P("q_ann_ivf_topk",
       "IVF ANN: memoized broadcast centroids, cell equi-join touches nprobe/nlist of the corpus"),
     P("q_semdedup",

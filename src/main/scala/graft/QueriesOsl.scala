@@ -167,7 +167,7 @@ object QueriesOsl {
       Some(s"""$E SELECT event, COUNT(DISTINCT id) AS customers,
         COUNT(*) AS n_rows FROM e GROUP BY event""")),
 
-    // Full OSL pipeline: parse -> per-customer interpreter (flatMapGroups)
+    // Full OSL pipeline: parse -> per-customer interpreter (sorted groups)
     // -> relational merge. Script mirrors README.md:152-196.
     Q("q_osl_event_tally",
       (s, dir) => {
@@ -647,7 +647,8 @@ object QueriesOsl {
     // src/queryinterpreter.cpp:3116-3264): the script assigns declared
     // is_customer props per person; the result is the write-back updates
     // frame a catalog merge would apply (Catalog.runPropWriteback). One
-    // cogroup shuffle on id — the storage bucketing key.
+    // cogroup on the id attribute — the storage bucketing key, so a
+    // bucketed events scan is not exchanged.
     Q("q_osl_prop_writeback",
       (s, dir) => {
         import org.apache.spark.sql.types._
@@ -671,9 +672,9 @@ object QueriesOsl {
 
     // foreach-mode histogram (`each_value` iteration over a property's
     // distinct values, src/oloop_histogram.cpp:232-330) compiled as ONE
-    // grouped plan: a single groupByKey(id) pass binds each_value per
-    // customer in memory, then one aggregation buckets every value's
-    // per-person returns — not |values| sequential driver-looped queries.
+    // grouped plan: a single per-person pass (sorted groups on id) binds
+    // each_value per customer in memory, then one aggregation buckets every
+    // value's per-person returns — not |values| driver-looped queries.
     Q("q_histogram_foreach",
       (s, dir) => {
         val e = Tables.events(s, dir)

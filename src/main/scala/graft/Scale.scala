@@ -21,6 +21,12 @@ object Scale {
   def main(args: Array[String]): Unit = {
     val factors = args.headOption.getOrElse("1,4,10")
       .split(",").map(_.trim.toInt).toSeq
+    // the exponent is a slope over log(factor): one distinct factor has none
+    if (factors.distinct.size < 2) {
+      System.err.println("usage: graft.Scale <factor,factor[,...]> [operator filter]" +
+        s": the scaling exponent needs at least two distinct factors, got ${factors.mkString(",")}")
+      sys.exit(2)
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -7,8 +7,8 @@ import Ast._
 /** Per-customer OSL interpreter (Tier B, SURVEY §7.1).
   *
   * Executes a parsed [[Ast.Program]] against one customer's time-ordered
-  * rows. Runs inside `Dataset.groupByKey(id).flatMapGroups` — pure Scala, no
-  * Spark types — and emits one partial-aggregate record per touched group
+  * rows. Runs inside [[OslEngine]]'s per-person pass (sorted groups on the
+  * `id` attribute) — pure Scala, no Spark types — and emits one partial-aggregate record per touched group
   * node, already deduplicated with the reference's distinct-key semantics
   * (`src/queryinterpreter.cpp:167-334`): key = (column, distinct value,
   * row-or-0-for-people, group node). Partials merge relationally downstream.

@@ -1,6 +1,9 @@
 package graft.osl
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import scala.collection.immutable.ArraySeq
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, KeyValueGroupedDataset, Row}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -9,12 +12,16 @@ import Ast._
 /** Runs OSL scripts over the normalized event DataFrame
   * `(id, stamp, event, …props)` — the engine's Tier B path (SURVEY §7.1):
   *
-  *   events.groupByKey(id) → per-customer [[Interpreter]] → per-person,
-  *   per-node partial aggregates → relational merge.
+  *   events grouped on the `id` attribute, sorted by stamp within each
+  *   person → per-customer [[Interpreter]] → per-person, per-node partial
+  *   aggregates → relational merge.
   *
-  * The only shuffle is on `id` (the same key the storage layer
-  * buckets/partitions by, so at scale this is co-located), plus the final
-  * tiny group-node aggregation. Partials are already deduplicated with the
+  * Every route runs that pass through one helper, [[perPerson]]. Because
+  * it groups on the `id` attribute itself, the planner reuses a child's
+  * `HashPartitioning(id)`: over the catalog's bucketed scan there is no
+  * person exchange, and no stamp sort unless the scan was coalesced. Over
+  * any other frame the one shuffle is on `id`, plus the final tiny
+  * group-node aggregation. Partials are already deduplicated with the
   * reference's distinct-key semantics, so the merge is plain SUM/MIN/MAX —
   * associative, partial-aggregatable, skew-tolerant.
   */
@@ -40,16 +47,17 @@ object OslEngine {
     StructType(partialSchema.fields ++ aggFields)
   }
 
-  /** Convert a Spark Row into the interpreter's value array. */
-  private def rowToValues(row: Row, n: Int): Array[Value] = {
-    val out = new Array[Value](n)
-    var i = 0
-    while (i < n) {
-      out(i) = if (row.isNullAt(i)) VNone else Value(row.get(i))
-      i += 1
-    }
-    out
-  }
+  /** Convert one person's Spark Rows into the interpreter's value arrays. */
+  private def personRows(it: Iterator[Row]): IndexedSeq[Array[Value]] =
+    ArraySeq.unsafeWrapArray(it.map { row =>
+      val out = new Array[Value](row.length)
+      var i = 0
+      while (i < out.length) {
+        out(i) = if (row.isNullAt(i)) VNone else Value(row.get(i))
+        i += 1
+      }
+      out
+    }.toArray)
 
   /** Run an event query script; returns the group-tree nodes as rows
     * `(depth, g1..g8, <select aliases…>)`. */
@@ -79,7 +87,7 @@ object OslEngine {
        else Seq(SelectCol("count", "id", "id", None, all = false))).toVector
 
     val partials = runInterpreter(prefilter(events, program.code, now),
-      program, now, sessionGapMs, stampedRowIds)
+      program, selects.length, now, sessionGapMs, stampedRowIds)
 
     val gCols = (1 to MaxDepth).map(i => col(s"g$i"))
     val aggExprs = selects.zipWithIndex.map { case (sel, j) =>
@@ -152,12 +160,7 @@ object OslEngine {
       case (Some(c), Seq()) => return c
       case _ =>
     }
-    val spark = events.sparkSession
-    val schema = events.schema
-    val nCols = schema.fields.length
-    val colIdx: Map[String, Int] = schema.fieldNames.zipWithIndex.toMap
-    val idIdx = colIdx("id")
-    val stampIdx = colIdx("stamp")
+    val colIdx = columnIndex(events)
     val interps = defs.map(d =>
       (d.name, new Interpreter(Program(Nil, d.code), colIdx, now, sessionGapMs)))
     // single-definition, single-each_row segment scripts admit the same
@@ -166,24 +169,12 @@ object OslEngine {
       case Seq(d) => prefilter(events, d.code, now)
       case _ => events
     }
-
-    implicit val enc = Encoders.product[(String, String)]
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-    implicit val rowEnc: org.apache.spark.sql.Encoder[Row] = ExpressionEncoder(schema)
-
-    val ds = source.as(rowEnc)
-      .groupByKey(r => r.get(idIdx).toString)(Encoders.STRING)
-    val out = ds.flatMapGroups { (pid: String, it: Iterator[Row]) =>
-      val rows = it.map(r => rowToValues(r, nCols)).toArray
-      java.util.Arrays.sort(rows, Ordering.by((a: Array[Value]) => a(stampIdx).asLong))
-      val rowsSeq: IndexedSeq[Array[Value]] = rows
-      interps.iterator.flatMap { case (name, interp) =>
-        val res = interp.run(VStr(pid), rowsSeq)
-        val member = res.returned.lastOption.exists(_.truthy)
-        if (member) Iterator((name, pid)) else Iterator.empty
+    val interpreted = perPerson(source) { (pid, rows) =>
+      interps.iterator.collect {
+        case (name, interp) if interp.run(VStr(pid), rows).returned.lastOption.exists(_.truthy) =>
+          (name, pid)
       }
-    }(enc)
-    val interpreted = out.toDF("segment", "id")
+    }(Encoders.product[(String, String)]).toDF("segment", "id")
     compiled.map(_.unionByName(interpreted)).getOrElse(interpreted)
   }
 
@@ -204,27 +195,10 @@ object OslEngine {
         case None => ()
       }
     }
-    val spark = events.sparkSession
-    val schema = events.schema
-    val nCols = schema.fields.length
-    val colIdx: Map[String, Int] = schema.fieldNames.zipWithIndex.toMap
-    val idIdx = colIdx("id")
-    val stampIdx = colIdx("stamp")
-    val interp = new Interpreter(program, colIdx, now, sessionGapMs)
-
-    implicit val enc = Encoders.product[(String, Double)]
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-    implicit val rowEnc: org.apache.spark.sql.Encoder[Row] = ExpressionEncoder(schema)
-
-    val ds = events.as(rowEnc)
-      .groupByKey(r => r.get(idIdx).toString)(Encoders.STRING)
-    val out = ds.flatMapGroups { (pid: String, it: Iterator[Row]) =>
-      val rows = it.map(r => rowToValues(r, nCols)).toArray
-      java.util.Arrays.sort(rows, Ordering.by((a: Array[Value]) => a(stampIdx).asLong))
-      val res = interp.run(VStr(pid), rows)
-      res.returned.iterator.map(v => (pid, v.asDouble))
-    }(enc)
-    out.toDF("id", "value")
+    val interp = new Interpreter(program, columnIndex(events), now, sessionGapMs)
+    perPerson(events) { (pid, rows) =>
+      interp.run(VStr(pid), rows).returned.iterator.map(v => (pid, v.asDouble))
+    }(Encoders.product[(String, Double)]).toDF("id", "value")
   }
 
   /** Foreach-mode histogram (`each_value` iteration,
@@ -233,8 +207,8 @@ object OslEngine {
     * variable bound and emit the per-person return values. Returns
     * `(each_value, id, value)` rows.
     *
-    * Scale shape: ONE `groupByKey(id)` shuffle — the same pass the plain
-    * histogram pays — with the (bounded, index-walk-sized) value list
+    * Scale shape: ONE per-person pass — the same [[perPerson]] pass the
+    * plain histogram pays — with the (bounded, index-walk-sized) value list
     * riding in the closure; the inner loop over values happens in memory
     * against the customer's already-sorted rows, exactly the reference's
     * per-partition loop. The alternative (one full query per value, driver
@@ -242,30 +216,14 @@ object OslEngine {
   def histogramForeach(events: DataFrame, script: String, values: Seq[Any],
                        now: Long, sessionGapMs: Long = 30 * 60 * 1000L): DataFrame = {
     val program = Parser.program(script)
-    val schema = events.schema
-    val nCols = schema.fields.length
-    val colIdx: Map[String, Int] = schema.fieldNames.zipWithIndex.toMap
-    val idIdx = colIdx("id")
-    val stampIdx = colIdx("stamp")
-    val interp = new Interpreter(program, colIdx, now, sessionGapMs)
+    val interp = new Interpreter(program, columnIndex(events), now, sessionGapMs)
     val vals: Array[Any] = values.toArray
-
-    implicit val enc = Encoders.product[(String, String, Double)]
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-    implicit val rowEnc: org.apache.spark.sql.Encoder[Row] = ExpressionEncoder(schema)
-
-    val ds = events.as(rowEnc)
-      .groupByKey(r => r.get(idIdx).toString)(Encoders.STRING)
-    val out = ds.flatMapGroups { (pid: String, it: Iterator[Row]) =>
-      val rows = it.map(r => rowToValues(r, nCols)).toArray
-      java.util.Arrays.sort(rows, Ordering.by((a: Array[Value]) => a(stampIdx).asLong))
+    perPerson(events) { (pid, rows) =>
       vals.iterator.flatMap { v =>
-        val res = interp.run(VStr(pid), rows,
-          Map("each_value" -> Value(v)))
+        val res = interp.run(VStr(pid), rows, Map("each_value" -> Value(v)))
         res.returned.iterator.map(r => (String.valueOf(v), pid, r.asDouble))
       }
-    }(enc)
-    out.toDF("each_value", "id", "value")
+    }(Encoders.product[(String, String, Double)]).toDF("each_value", "id", "value")
   }
 
   /** Run a script per customer and emit the customer-property write-back
@@ -279,61 +237,51 @@ object OslEngine {
     * before writes see the customer record and untouched props survive the
     * whole-row merge downstream ([[graft.operators.CustomerProps.writeBack]]).
     *
-    * Scale shape: ONE cogroup shuffle keyed on `id` — the same key the
-    * storage layer buckets by, so on a real cluster both sides arrive
-    * co-partitioned; the output carries only ids + prop values, never the
-    * event history. Persons without events emit nothing (the reference only
-    * runs `on_insert` scripts for customers whose data changed). */
+    * Scale shape: ONE cogroup on the `id` attribute, events sorted by
+    * stamp — the same key the storage layer buckets by, so a bucketed
+    * events scan keeps its partitioning and only the customers side is
+    * exchanged to match it; the output carries only ids + prop values,
+    * never the event history. Persons without events emit nothing (the
+    * reference only runs `on_insert` scripts for customers whose data
+    * changed). */
   def propWriteback(events: DataFrame, customers: DataFrame, script: String,
                     now: Long, sessionGapMs: Long = 30 * 60 * 1000L): DataFrame = {
-    val eSchema = events.schema
-    val nCols = eSchema.fields.length
-    val colIdx: Map[String, Int] = eSchema.fieldNames.zipWithIndex.toMap
-    val idIdx = colIdx("id")
-    val stampIdx = colIdx("stamp")
-    val cSchema = customers.schema
-    val cIdx: Map[String, Int] = cSchema.fieldNames.zipWithIndex.toMap
-    require(cIdx.contains("id"), "customers frame must carry an id column")
-    val propFields = cSchema.fields.filterNot(_.name == "id").toVector
+    val idField = events.schema("id")
+    require(customers.columns.contains("id"), "customers frame must carry an id column")
+    // CoGroup needs one key field on both sides, type and nullability alike.
+    // Only the customers side (exchanged anyway) is reshaped, so the events
+    // side keeps its partitioning; a null customer id matches no person.
+    val cu = if (customers.schema("id") == idField) customers else {
+      val id = col("id").try_cast(idField.dataType)
+      customers.where(id.isNotNull).withColumn("id",
+        if (idField.nullable) when(id.isNotNull, id)
+        else coalesce(id, lit(0).cast(idField.dataType)))
+    }
+    val cIdx = columnIndex(cu)
+    val propFields = cu.schema.fields.filterNot(_.name == "id").toVector
     require(propFields.nonEmpty, "customers frame declares no customer props")
-    val idType = eSchema.fields(idIdx).dataType
-    val outSchema = StructType(StructField("id", idType) +: propFields)
-    val program = Parser.program(script)
-    val interp = new Interpreter(program, colIdx, now, sessionGapMs,
-      propNames = propFields.map(_.name).toSet)
+    val outSchema = StructType(StructField("id", idField.dataType) +: propFields)
+    val interp = new Interpreter(Parser.program(script), columnIndex(events), now,
+      sessionGapMs, propNames = propFields.map(_.name).toSet)
 
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-    implicit val evEnc: org.apache.spark.sql.Encoder[Row] = ExpressionEncoder(eSchema)
-    val cuEnc: org.apache.spark.sql.Encoder[Row] = ExpressionEncoder(cSchema)
-    implicit val outEnc: org.apache.spark.sql.Encoder[Row] = ExpressionEncoder(outSchema)
-
-    val ev = events.as(evEnc).groupByKey(r => r.get(idIdx).toString)(Encoders.STRING)
-    val cu = customers.as(cuEnc).groupByKey(r => r.get(cIdx("id")).toString)(Encoders.STRING)
-    ev.cogroup(cu) { (pid: String, evIt: Iterator[Row], cuIt: Iterator[Row]) =>
-      val rows = evIt.map(r => rowToValues(r, nCols)).toArray
-      if (rows.isEmpty) Iterator.empty // customer row only: script doesn't run
-      else {
-        java.util.Arrays.sort(rows, Ordering.by((a: Array[Value]) => a(stampIdx).asLong))
-        val init: Map[String, Value] = cuIt.buffered.headOption match {
-          case Some(cr) => propFields.map { f =>
-            val i = cIdx(f.name)
-            f.name -> (if (cr.isNullAt(i)) (VNone: Value) else Value(cr.get(i)))
-          }.toMap
-          case None => propFields.map(_.name -> (VNone: Value)).toMap
-        }
-        val res = interp.run(VStr(pid), rows, init)
-        if (res.props.isEmpty) Iterator.empty
+    byPerson(events).cogroupSorted(byPerson(cu))(col("stamp"))() {
+      (key: Row, evIt: Iterator[Row], cuIt: Iterator[Row]) =>
+        if (!evIt.hasNext) Iterator.empty // customer row only: script doesn't run
         else {
-          val idRaw: Any = idType match {
-            case LongType    => rows(0)(idIdx).asLong
-            case IntegerType => rows(0)(idIdx).asLong.toInt
-            case _           => rows(0)(idIdx).asStr
+          val rows = personRows(evIt)
+          val init: Map[String, Value] = cuIt.nextOption() match {
+            case Some(cr) => propFields.map { f =>
+              val i = cIdx(f.name)
+              f.name -> (if (cr.isNullAt(i)) (VNone: Value) else Value(cr.get(i)))
+            }.toMap
+            case None => propFields.map(_.name -> (VNone: Value)).toMap
           }
-          Iterator(Row.fromSeq(
-            idRaw +: propFields.map(f => valueToSpark(res.props(f.name), f.dataType))))
+          val res = interp.run(VStr(String.valueOf(key.get(0))), rows, init)
+          if (res.props.isEmpty) Iterator.empty
+          else Iterator(Row.fromSeq(
+            key.get(0) +: propFields.map(f => valueToSpark(res.props(f.name), f.dataType))))
         }
-      }
-    }(outEnc).toDF()
+    }(ExpressionEncoder(outSchema)).toDF()
   }
 
   /** OSL value → Spark value under the DECLARED prop type — the schema
@@ -439,35 +387,12 @@ object OslEngine {
       case _ => events
     }
 
-  private def runInterpreter(events: DataFrame, program: Program,
+  private def runInterpreter(events: DataFrame, program: Program, nSel: Int,
                              now: Long, sessionGapMs: Long,
-                             stampedRowIds: Boolean = false): DataFrame = {
-    val spark = events.sparkSession
-    val schema = events.schema
-    val nCols = schema.fields.length
-    val colIdx: Map[String, Int] = schema.fieldNames.zipWithIndex.toMap
-    val idIdx = colIdx("id")
-    val stampIdx = colIdx("stamp")
-    val selects =
-      (if (program.select.nonEmpty) program.select
-       else Seq(SelectCol("count", "id", "id", None, all = false))).toVector
-    val nSel = selects.length
-    val outSchema = fullPartialSchema(nSel)
-    val interp = new Interpreter(program, colIdx, now, sessionGapMs, stampedRowIds)
-
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-    implicit val rowEnc: org.apache.spark.sql.Encoder[Row] = ExpressionEncoder(schema)
-    implicit val outEnc: org.apache.spark.sql.Encoder[Row] =
-      ExpressionEncoder(outSchema)
-
-    val ds = events.as(rowEnc)
-      .groupByKey(r => r.get(idIdx).toString)(Encoders.STRING)
-
-    ds.flatMapGroups { (pid: String, it: Iterator[Row]) =>
-      val rows = it.map(r => rowToValues(r, nCols)).toArray
-      java.util.Arrays.sort(rows, Ordering.by((a: Array[Value]) => a(stampIdx).asLong))
-      val res = interp.run(VStr(pid), rows)
-      res.nodes.iterator.map { case (path, bufs) =>
+                             stampedRowIds: Boolean): DataFrame = {
+    val interp = new Interpreter(program, columnIndex(events), now, sessionGapMs, stampedRowIds)
+    perPerson(events) { (pid, rows) =>
+      interp.run(VStr(pid), rows).nodes.iterator.map { case (path, bufs) =>
         val gs: Seq[Any] = (0 until MaxDepth).map(i =>
           if (i < path.length) path(i) else null)
         val aggs: Seq[Any] = (0 until nSel).flatMap { j =>
@@ -479,6 +404,26 @@ object OslEngine {
         }
         Row.fromSeq((path.length +: gs) ++ aggs)
       }
-    }(outEnc)
+    }(ExpressionEncoder(fullPartialSchema(nSel))).toDF()
   }
+
+  private def columnIndex(df: DataFrame): Map[String, Int] =
+    df.schema.fieldNames.zipWithIndex.toMap
+
+  /** `df` grouped by person on the `id` attribute itself, never a function
+    * of it, so the planner can reuse a child's `HashPartitioning(id)`. The
+    * one-field Row key takes the column's own type: long ids in the
+    * registry tables, string ids in the catalog. */
+  private def byPerson(df: DataFrame): KeyValueGroupedDataset[Row, Row] =
+    df.groupBy(col("id")).as[Row, Row](
+      ExpressionEncoder(StructType(Seq(df.schema("id")))), ExpressionEncoder(df.schema))
+
+  /** The Tier B per-person pass: `f(pid, rows)` once per customer, over
+    * that customer's rows in stamp order (ties in arbitrary order). `pid`
+    * is the id's string form. */
+  private def perPerson[U: Encoder](events: DataFrame)(
+      f: (String, IndexedSeq[Array[Value]]) => Iterator[U]): Dataset[U] =
+    byPerson(events).flatMapSortedGroups(col("stamp")) { (key: Row, it: Iterator[Row]) =>
+      f(String.valueOf(key.get(0)), personRows(it))
+    }
 }

@@ -1098,7 +1098,7 @@ object TierA {
     // listing (the commit protocol never rewrites a data file in place),
     // so growth is a cache MISS, not a stale hit. LocalRelations list no
     // files; the data-sensitive semantic hash still disambiguates those.
-    val listing = events.inputFiles.sorted.mkString(" ").hashCode
+    val listing = events.inputFiles.sorted.mkString("\u0000").hashCode
     val key = canon.semanticHash().toString + ":" + listing + ":" + canon.toString
     val nowT = System.currentTimeMillis()
     val hit = rowBoundCache.get(key)
@@ -4174,7 +4174,7 @@ object TierA {
       case Call(name, as) => traverse(as.map(compileRet)).flatMap(marshal(name, _))
       case other => compileExpr(other, now)
     }
-    // interpreter person ids surface as strings (groupByKey key)
+    // interpreter person ids surface as strings (the id's string form)
     compileRet(retExpr).map(rc =>
       agged.select(col("id").cast("string").as("id"),
         rc.cast("double").as("value")))

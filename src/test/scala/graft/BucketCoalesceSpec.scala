@@ -5,13 +5,14 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Not}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, count, lit, row_number}
 
+import graft.osl.OslEngine
 import graft.plans.CoalesceCatalogBuckets
 import graft.sources.ManifestFileIndex
 
@@ -224,6 +225,65 @@ class BucketCoalesceSpec extends SparkSpec {
       assert(findSmj(selfPlan).isDefined, s"expected a sort-merge join:\n$selfPlan")
       assert(scansOf(selfPlan).map(_.optionalNumCoalescedBuckets) == Seq(k, k), selfPlan.toString)
       assert(!selfPlan.toString.contains("Exchange"), s"self-join re-exchanged:\n$selfPlan")
+    }
+  }
+
+  /** Every node of the plan, root first, through AQE's wrappers. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case other => other +: other.children.flatMap(nodes)
+  }
+
+  /** The plan's first node named `name`. */
+  private def node(p: SparkPlan, name: String): SparkPlan =
+    nodes(p).find(_.nodeName == name).getOrElse(fail(s"no $name in\n$p"))
+
+  private def shuffles(ns: Seq[SparkPlan]) = ns.collect { case e: ShuffleExchangeLike => e }
+  private def sorts(ns: Seq[SparkPlan]) = ns.collect { case s: SortExec => s }
+
+  test("Tier B rides the bucketed scan: no person exchange below MapGroups or the write-back CoGroup") {
+    // perfbench's `basket` shape: an each_row with if/else tallies, which
+    // only the interpreter runs
+    val basket =
+      """each_row where event.is(== 'buy')
+        |  if value.is(> 200)
+        |    << 'bulk'
+        |  else
+        |    << 'single'
+        |  end
+        |end
+        |""".stripMargin
+    val writeback = "total = sum(value) where event.is(== 'buy')"
+    val now = D0 + 30 * Day
+    val parquetDir = Files.createTempDirectory("graft_tierb").toString + "/events"
+    rows.toDF("id", "stamp", "event", "value").write.parquet(parquetDir)
+    val plain = spark.read.parquet(parquetDir)
+    val prior = Seq(("u1", 7.0), ("u2", 9.0)).toDF("id", "total")
+    val wantTree = collected(OslEngine.query(plain, basket, now, forceTierB = true))
+    val wantProps = collected(OslEngine.propWriteback(plain, prior, writeback, now))
+    assert(wantTree.nonEmpty && wantProps.size == 40)
+    // 2 buckets stay uncoalesced at local[2]: the scan's (id, stamp) order
+    // serves the groups, so no sort either; 32 buckets coalesce to 2 and
+    // need one stamp sort, but still no exchange
+    for ((buckets, nSorts) <- Seq(2 -> 0, 32 -> 1)) {
+      val api = freshApi()
+      api.tableCreate(TableMeta("tb", Seq(PropDef("value", "double"),
+        PropDef("total", "double", isCustomer = true)), TableSettings(storageBuckets = buckets)))
+      insert(api, "tb", rows)
+      api.catalog.mergeCustomers("tb", prior)
+      val events = api.catalog.events("tb")
+      val tree = OslEngine.query(events, basket, now)
+      assert(collected(tree) == wantTree, s"$buckets buckets")
+      val mapGroups = node(tree.queryExecution.executedPlan, "MapGroups")
+      assert(shuffles(nodes(mapGroups)).isEmpty, s"$buckets buckets: exchange below MapGroups\n$mapGroups")
+      assert(sorts(nodes(mapGroups)).size == nSorts, s"$buckets buckets: expected $nSorts sorts\n$mapGroups")
+      // the write-back cogroup: only the customers side is exchanged
+      val props = OslEngine.propWriteback(events, api.catalog.customers("tb"), writeback, now)
+      assert(collected(props) == wantProps, s"$buckets buckets")
+      val eventSide = node(props.queryExecution.executedPlan, "CoGroup").children.head
+      assert(scansOf(eventSide).nonEmpty && shuffles(nodes(eventSide)).isEmpty,
+        s"$buckets buckets: events side of CoGroup exchanged\n$eventSide")
     }
   }
 }

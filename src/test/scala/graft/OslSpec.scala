@@ -182,6 +182,21 @@ class OslSpec extends SparkSpec {
     assert(grouped("hammer") == Set(("alice", 0.0), ("bob", 1.0)))
   }
 
+  test("propWriteback matches customers whose id differs in type or nullability") {
+    // long, non-nullable event ids; the stored totals seed the script
+    val ev = Seq((1L, Mon, "purchase", 2.0), (1L, Mon + H, "purchase", 3.0), (2L, Mon, "view", 4.0))
+      .toDF("id", "stamp", "event", "product_price")
+    val script = "total = total + sum(product_price) where event.is(== 'purchase')"
+    val customers = Seq(
+      Seq(("1", 10.0), ("2", 20.0)).toDF("id", "total"), // string ids
+      Seq((Option(1L), 10.0), (Option(2L), 20.0), (None, 30.0)).toDF("id", "total")) // a null id
+    for (cu <- customers) {
+      val out = OslEngine.propWriteback(ev, cu, script, now = Tue)
+        .as[(Long, Double)].collect().toMap
+      assert(out == Map(1L -> 15.0, 2L -> 20.0), cu.schema.toString)
+    }
+  }
+
   test("language: vars, containers, for/in, break, if/else") {
     val script =
       """total = 0

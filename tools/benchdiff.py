@@ -26,6 +26,11 @@ parent's profiled queries (the queries that are nothing but stage
 overhead). REL (10%) covers the queries whose time is real work rather
 than stages.
 
+Both records must come from the same leg: the core count Bench records as
+"cpus" (and the driver heap as "driver_heap_mb"). Records whose "cpus"
+differ are refused with exit code 2. A record without "cpus" (written
+before Bench recorded it) is diffed with a warning that its leg is unknown.
+
 Prints one row per query and a count per label. Exit code 0.
 """
 import argparse
@@ -85,6 +90,18 @@ def diff(parent, change, floor=None, match=""):
     return floor, [classify(q, parent, change, floor) for q in names]
 
 
+def leg_check(parent, change):
+    """(ok, message) for diffing the two records: not ok when their core
+    counts differ, a warning message when either does not record one."""
+    pc, cc = parent.get("cpus"), change.get("cpus")
+    if pc is None or cc is None:
+        return True, "warning: leg unknown (no \"cpus\" in the %s record)" % (
+            "parent" if pc is None else "change")
+    if pc != cc:
+        return False, "refusing to diff different legs: parent cpus=%s, change cpus=%s" % (pc, cc)
+    return True, None
+
+
 def render(floor, rows):
     def prof(p):
         return "-" if p is None else "%d/%d" % (p["stages"], p["jobs"])
@@ -109,7 +126,13 @@ def main(argv=None):
     ap.add_argument("change")
     ap.add_argument("--match", default="", help="only queries with this name prefix")
     a = ap.parse_args(argv)
-    floor, rows = diff(load(a.parent), load(a.change), match=a.match)
+    parent, change = load(a.parent), load(a.change)
+    ok, msg = leg_check(parent, change)
+    if msg:
+        print(msg, file=sys.stderr)
+    if not ok:
+        return 2
+    floor, rows = diff(parent, change, match=a.match)
     print(render(floor, rows))
     return 0
 

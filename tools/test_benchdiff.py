@@ -1,4 +1,6 @@
 """Tests for tools/benchdiff.py: python3 -m unittest discover -s tools"""
+import contextlib
+import io
 import json
 import os
 import tempfile
@@ -7,9 +9,22 @@ import unittest
 import benchdiff
 
 
-def record(queries, profile, errors=None):
-    return {"metric": "total", "queries": queries, "profile": profile,
-            "errors": errors or {}}
+def record(queries, profile, errors=None, cpus=None):
+    rec = {"metric": "total", "queries": queries, "profile": profile,
+           "errors": errors or {}}
+    if cpus is not None:
+        rec["cpus"] = cpus
+    return rec
+
+
+def write_records(d, *recs):
+    paths = []
+    for i, rec in enumerate(recs):
+        path = os.path.join(d, "r%d.json" % i)
+        with open(path, "w") as f:
+            f.write(json.dumps(rec) + "\n")
+        paths.append(path)
+    return paths
 
 
 class BenchDiffTest(unittest.TestCase):
@@ -62,15 +77,33 @@ class BenchDiffTest(unittest.TestCase):
         prof = {"q_catalog_x": {"stages": 2, "jobs": 1}, "q_other": {"stages": 2, "jobs": 1}}
         p = record({"q_catalog_x": 1.0, "q_other": 1.0}, prof)
         with tempfile.TemporaryDirectory() as d:
-            paths = []
-            for name, rec in (("p.json", p), ("c.json", p)):
-                path = os.path.join(d, name)
-                with open(path, "w") as f:
-                    f.write(json.dumps(rec) + "\n")
-                paths.append(path)
+            paths = write_records(d, p, p)
             _, rows = benchdiff.diff(p, p, match="q_catalog_")
             self.assertEqual([r["query"] for r in rows], ["q_catalog_x"])
             self.assertEqual(benchdiff.main(paths + ["--match", "q_catalog_"]), 0)
+
+    def test_refuses_different_legs(self):
+        prof = {"q": {"stages": 1, "jobs": 1}}
+        p = record({"q": 1.0}, prof, cpus=8)
+        c = record({"q": 1.0}, prof, cpus=32)
+        self.assertEqual(benchdiff.leg_check(p, c)[0], False)
+        with tempfile.TemporaryDirectory() as d:
+            err = io.StringIO()
+            with contextlib.redirect_stderr(err):
+                self.assertEqual(benchdiff.main(write_records(d, p, c)), 2)
+            self.assertIn("cpus=8", err.getvalue())
+        self.assertEqual(benchdiff.leg_check(p, record({"q": 1.0}, prof, cpus=8)), (True, None))
+
+    def test_warns_when_leg_unknown(self):
+        prof = {"q": {"stages": 1, "jobs": 1}}
+        p = record({"q": 1.0}, prof)  # a record from before "cpus"
+        c = record({"q": 1.0}, prof, cpus=8)
+        with tempfile.TemporaryDirectory() as d:
+            err, out = io.StringIO(), io.StringIO()
+            with contextlib.redirect_stderr(err), contextlib.redirect_stdout(out):
+                self.assertEqual(benchdiff.main(write_records(d, p, c)), 0)
+            self.assertIn("leg unknown", err.getvalue())
+            self.assertIn("within noise", out.getvalue())
 
 
 if __name__ == "__main__":
