@@ -2,6 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.collection.mutable
+import scala.util.matching.Regex
+
 /** Regenerates PLANS.md: the physical plans of representative registry
   * queries with the scale-critical properties called out. Run after plan
   * changes: `sbt "runMain graft.Plans"`. Plans are captured COLD (no hot
@@ -398,6 +401,27 @@ object Plans {
         "index); per-bucket COUNT(DISTINCT id) partials sum exactly because " +
         "buckets partition persons"))
 
+  /** `plan` with its run-specific tokens replaced, so two runs that build
+    * the same plan print the same text: expression ids (`#908L`) and
+    * `plan_id=` numbers renumbered by first appearance, temp-directory
+    * paths, `@<hex>` object hashes and `$$Lambda$…/0x…` class names. */
+  private[graft] def normalize(plan: String): String = {
+    def renumber(s: String, re: Regex, token: Int => String): String = {
+      val seen = mutable.HashMap.empty[String, Int]
+      re.replaceAllIn(s, m =>
+        Regex.quoteReplacement(token(seen.getOrElseUpdate(m.group(1), seen.size))))
+    }
+    val tmp = Regex.quote(Paths.get(System.getProperty("java.io.tmpdir")).toString)
+    val ids = renumber(plan, "#(\\d+)".r, i => s"#$i")
+    renumber(ids, "plan_id=(\\d+)".r, i => s"plan_id=$i")
+      .replaceAll(s"$tmp/([A-Za-z_-]+)\\d+", "<tmp>/$1")
+      // Spark abbreviates a long scan location with "...", so the random
+      // name's length moves the cut: drop the temp path's cut tail
+      .replaceAll("(<tmp>/[A-Za-z_-]+)[^\\s,\\]]*\\.\\.\\.", "$1/...")
+      .replaceAll("\\$\\$Lambda(\\$\\d+)?/0x[0-9a-f]+", Regex.quoteReplacement("$$Lambda"))
+      .replaceAll("(?<=[\\w$])@[0-9a-f]+\\b", "@<hash>")
+  }
+
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.builder("local[4]", 4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -408,8 +432,8 @@ object Plans {
     sb.append("Generated by `sbt \"runMain graft.Plans\"` at sf0.001, cold scans\n")
     sb.append("(no hot-table cache) so parquet pushdown/pruning is visible.\n")
     picks.foreach { p =>
-      val plan = Queries.queries(p.name)(spark, dir)
-        .queryExecution.executedPlan.toString
+      val plan = normalize(Queries.queries(p.name)(spark, dir)
+        .queryExecution.executedPlan.toString)
       sb.append(s"\n## ${p.name}\n\n${p.why}\n\n```\n")
       // keep the tree readable: drop codegen ids and trim very long lines
       // (FileScan lines get extra width — PartitionFilters/PushedFilters,
@@ -465,7 +489,7 @@ object Plans {
           enrich(spark.table("plans_docs_b"), spark.table("plans_scores_b")))) {
         df.count() // materialize so AQE finalizes the plan
         sb.append(s"\n## bucketed corpus layout A/B — $tag\n\n```\n")
-        df.queryExecution.executedPlan.toString.linesIterator.take(40)
+        normalize(df.queryExecution.executedPlan.toString).linesIterator.take(40)
           .foreach(l => sb.append(l.take(200)).append('\n'))
         sb.append("```\n")
       }

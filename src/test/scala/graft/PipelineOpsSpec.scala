@@ -149,6 +149,28 @@ class PipelineOpsSpec extends SparkSpec {
     // nearDedup keeps one representative per cluster plus the singleton
     assert(Dedup.nearDedup(clones, "doc_id", "text")
       .select("doc_id").as[Long].collect().toSet == Set(20L, 24L))
+
+    // a hot bucket: n near-identical, distinct boilerplate texts landing in
+    // the same LSH buckets. Star edges stay linear — within a band each
+    // member takes one edge from its bucket's representative, so at most
+    // n − 1 edges per band, never the n(n−1)/2 all-pairs — and edit-distance
+    // verify runs on those edges only
+    val n = 200
+    val boiler = Seq.tabulate(60)(i => s"w${i % 12}").mkString(" ")
+    val hot = (0 until n).map(i => (900000000L + i, s"$boiler end$i"))
+      .toDF("doc_id", "text")
+    val hotEdges = Dedup.minhashStarEdges(hot, col("doc_id"), col("text"))
+    val edges = hotEdges.as[(Long, Long)].collect()
+    val bands = 4
+    assert(edges.length <= bands * (n - 1) && edges.length < n * (n - 1) / 2)
+    assert(edges.groupBy(_._2).values.forall(_.length <= bands),
+      "one in-edge per member per band")
+    val hotComps = Dedup.connectedComponents(hotEdges, hot.select("doc_id"))
+      .as[(Long, Long)].collect()
+    assert(hotComps.length == n && hotComps.map(_._2).toSet == Set(900000000L))
+    val verified = Dedup.editDistanceVerify(hot, col("doc_id"), col("text"),
+      hotEdges, 0.5).count()
+    assert(verified <= edges.length)
   }
 
   test("persisted text index: candidates match from-scratch; append is incremental") {
